@@ -17,17 +17,9 @@ object Text {
     * `split` form it replaced paid a `Pattern.compile` per document
     * (String.split's fast path can't cover `\s+`) and measured ~half of
     * text_profile's fused cost at the r13 decomposition probe; the
-    * declarative form stays below as the parity reference.
+    * declarative form is the parity reference in FunctionsSpec.
     */
   def tokens(c: Column): Column = graft.plans.Tokens(c)
-
-  /** The replaced declarative tokenizer, kept verbatim as the parity
-    * reference (FunctionsSpec fuzz-compares it against the native
-    * expression — do not use on hot paths).
-    */
-  def tokensDeclarative(c: Column): Column =
-    when(c.isNull || trim(c) === "", array().cast("array<string>"))
-      .otherwise(split(trim(lower(c)), "\\s+"))
 
   /** Whitespace token count. */
   def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
@@ -271,10 +263,10 @@ object Text {
 
   /** Token-parameterized variant (see [[languageIdFromTokens]]).
     *
-    * Stays on the DECLARATIVE fold: the native one-pass
-    * [[graft.plans.TokenFingerprint]] expression (kept below,
-    * bit-parity-tested) measures 12% FASTER in an isolated A/B
-    * (OptProbe profile_declfp: declarative = 112% of native) but
+    * Stays on the DECLARATIVE fold: the native one-pass TokenFingerprint
+    * expression (parked in test sources, bit-parity-tested against this
+    * fold) measures 12% FASTER in an isolated A/B (declarative = 112% of
+    * native, OPTIMIZATION_r14.md §4) but
     * text_profile runs 30-45% SLOWER with it inside the full resident
     * bench session, reproducibly (six full-bench runs 0.178-0.212
     * s/inst native vs 0.143 declarative in the controlled bisect run,
@@ -285,13 +277,7 @@ object Text {
     * the session-context number wins. Revisit only with a full-bench
     * matched pair, not an isolated probe.
     */
-  def fingerprintFromTokens(toks: Column): Column =
-    fingerprintFromTokensDeclarative(toks)
-
-  /** The declarative fingerprint fold; [[graft.plans.TokenFingerprint]]
-    * is fuzz-compared against this in FunctionsSpec.
-    */
-  def fingerprintFromTokensDeclarative(toks: Column): Column = {
+  def fingerprintFromTokens(toks: Column): Column = {
     val positioned = zip_with(
       toks,
       sequence(lit(1), greatest(size(toks), lit(1))),

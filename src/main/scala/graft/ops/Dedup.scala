@@ -12,11 +12,14 @@ import graft.functions.{StableHash, Text, Vectors}
 object Dedup {
 
   /** Exact dedup by content digest. One shuffle on the 128-bit digest;
-    * keeps the lowest id per group (deterministic winner).
+    * keeps the lowest id per group (deterministic winner). `keys` are
+    * extra group columns (leading the output): rows only dedup against
+    * rows with equal keys.
     */
-  def exact(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(md5(col(textCol)).as("digest"), col(idCol))
-      .groupBy("digest")
+  def exact(df: DataFrame, textCol: String, idCol: String,
+      keys: Seq[String] = Nil): DataFrame =
+    df.select(keys.map(col) ++ Seq(md5(col(textCol)).as("digest"), col(idCol)): _*)
+      .groupBy((keys :+ "digest").map(col): _*)
       .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** Survivors of exact dedup (the canonical rows). */
@@ -936,7 +939,7 @@ object Dedup {
     * memory). Here the sort key is the 8-byte hash on a 24-byte row
     * (long-radix, cheap to spill), and the r14 probe shows clean scaling:
     * sf1 full-op 3.4-5.5 s vs window 2.6-4.1 s; sf10 62-79 s vs 31-75 s
-    * (PassagesProbe, interleaved pairs) — the window form is parity cold
+    * (interleaved pairs, OPTIMIZATION_r14.md §3) — the window form is parity cold
     * and ~2x faster warm, with identical output at every scale. The
     * r13 form avoided the sort with an aggregate + hinted shuffle-hash
     * semi join, but paid for it with a SECOND full tokenize+zip_with+
@@ -946,8 +949,8 @@ object Dedup {
     * before the consumers does NOT fix that, as the r14 before-plans
     * show) plus a second stream-sized exchange. One tokenize pass is
     * ~1/3 of the query, so folding count+probe into one window on the
-    * single shuffled stream wins (OptProbe fused r=4 sf0.1: 0.40 vs
-    * 0.54 s/inst). Skew exposure is unchanged from the semi-join form:
+    * single shuffled stream wins (fused r=4 sf0.1: 0.40 vs 0.54 s/inst,
+    * OPTIMIZATION_r14.md §3). Skew exposure is unchanged from the semi-join form:
     * its probe side also shuffled the raw stream on g, so a boilerplate
     * gram concentrates on one task either way, and maxGramDf bounds what
     * survives into the island merge.
@@ -963,10 +966,13 @@ object Dedup {
     * [[passageGramAudit]]).
     *
     * Output: (id, span_start, span_end, span_tokens, n_windows) with
-    * 1-based inclusive token positions, one row per maximal span.
+    * 1-based inclusive token positions, one row per maximal span. `keys`
+    * are extra partition columns (leading the output): gram occurrences
+    * only count among rows with equal keys, and spans merge per
+    * (keys, id).
     */
   def duplicatedPassages(df: DataFrame, textCol: String, idCol: String,
-      k: Int, maxGramDf: Int = 10000): DataFrame = {
+      k: Int, maxGramDf: Int = 10000, keys: Seq[String] = Nil): DataFrame = {
     require(k >= 2, "passage window must be >= 2 tokens")
     require(maxGramDf >= 2, "maxGramDf < 2 would drop every duplicated gram")
     val toks = Text.tokens(col(textCol))
@@ -977,11 +983,12 @@ object Dedup {
     val grams = shifted.reduceRight((a, b) =>
       zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
     // gram string -> 8-byte key map-side: only (id, p, g) ever shuffles.
+    val kc = keys.map(col)
     val windows = graft.core.Graft.spread(df)
-      .select(col(idCol).as("id"),
-        posexplode(slice(grams, lit(1), greatest(n - (k - 1), lit(0)))))
-      .select(col("id"), (col("pos") + 1).cast("long").as("p"),
-        StableHash.hash60(col("col")).as("g"))
+      .select(kc ++ Seq(col(idCol).as("id"),
+        posexplode(slice(grams, lit(1), greatest(n - (k - 1), lit(0))))): _*)
+      .select(kc ++ Seq(col("id"), (col("pos") + 1).cast("long").as("p"),
+        StableHash.hash60(col("col")).as("g")): _*)
     import org.apache.spark.sql.expressions.{Window => W}
     // df cap (same reduced-universe semantics as shinglePairCounts):
     // grams above maxGramDf are boilerplate (headers, licenses, viral
@@ -992,10 +999,10 @@ object Dedup {
     // tokenize, no join (scaladoc above for the r13/r10 alternatives and
     // the sf1/sf10 probe numbers).
     val marked = windows
-      .withColumn("__occ", count(lit(1)).over(W.partitionBy("g")))
+      .withColumn("__occ", count(lit(1)).over(W.partitionBy(kc :+ col("g"): _*)))
       .where(col("__occ") >= 2 && col("__occ") <= maxGramDf)
-      .select("id", "p")
-    val w = W.partitionBy("id").orderBy("p")
+      .select(kc ++ Seq(col("id"), col("p")): _*)
+    val w = W.partitionBy(kc :+ col("id"): _*).orderBy("p")
     marked
       .withColumn("__prev", lag(col("p"), 1).over(w))
       .withColumn("__new",
@@ -1003,13 +1010,13 @@ object Dedup {
           .otherwise(0L))
       .withColumn("__island", sum(col("__new")).over(
         w.rowsBetween(W.unboundedPreceding, 0)))
-      .groupBy("id", "__island")
+      .groupBy(kc ++ Seq(col("id"), col("__island")): _*)
       .agg(min(col("p")).as("span_start"),
         (max(col("p")) + (k - 1)).as("span_end"),
         count(lit(1)).as("n_windows"))
-      .select(col("id"), col("span_start"), col("span_end"),
+      .select(kc ++ Seq(col("id"), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start") + 1).as("span_tokens"),
-        col("n_windows"))
+        col("n_windows")): _*)
   }
 
   /** Recall-loss audit for [[duplicatedPassages]]' `maxGramDf` rail: ONE
@@ -1149,15 +1156,23 @@ object Dedup {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, iters: Int = 2,
       threshold: Double = 0.95): DataFrame = {
-    val sp = df.sparkSession
-    import sp.implicits._
     val e = df.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).as("embedding"))
-    val cents = Similarity.trainedCentroids(e, nCells, iters)
-    assignCells(e, cents, "vec_id", "embedding")
-      .transform(pruneCells(_, threshold))
+    semanticDedupWithCentroids(e, Similarity.trainedCentroids(e, nCells, iters),
+      "vec_id", "embedding", threshold)
       .withColumnRenamed("vec_id", idCol)
   }
+
+  /** [[semanticDedup]]'s assignment + prune over prebuilt centroids.
+    * `keys` (at most one integral column, leading the output) extends the
+    * cell key: vectors only prune against cellmates with an equal key.
+    * Output: (keys..., vec_id, cell, kept).
+    */
+  def semanticDedupWithCentroids(df: DataFrame,
+      cents: Seq[(Int, Array[Double])], idCol: String, vecCol: String,
+      threshold: Double, keys: Seq[String] = Nil): DataFrame =
+    assignCells(df, cents, idCol, vecCol, keys)
+      .transform(pruneCells(_, threshold, keys))
 
   /** Nearest-cell assignment as a narrow per-row argmin over the
     * driver-resident centroids (they come out of `trainedCentroids` as a
@@ -1177,33 +1192,39 @@ object Dedup {
     * and gives [[pruneCells]] a clean `Array[Double]` encoding.
     */
   private[graft] def assignCells(e: DataFrame, cents: Seq[(Int, Array[Double])],
-      idC: String, vecC: String): DataFrame = {
+      idC: String, vecC: String, keys: Seq[String] = Nil): DataFrame = {
     val sp = e.sparkSession
     import sp.implicits._
     val sorted = cents.sortBy(_._1)
     val cellIds = sorted.map(_._1.toLong).toArray
     val cvs = sorted.map(_._2).toArray
+    val nearest = (v: Array[Double]) => {
+      var bestCell = cellIds(0)
+      var best = Double.NaN
+      var c = 0
+      while (c < cvs.length) {
+        val d = math.sqrt(Similarity.l2sqOrNaN(v, cvs(c)))
+        if (!d.isNaN && (best.isNaN || d < best)) {
+          best = d; bestCell = cellIds(c)
+        }
+        c += 1
+      }
+      bestCell
+    }
     val clean = when(col(vecC).isNull || exists(col(vecC), _.isNull),
         lit(null).cast("array<double>"))
       .otherwise(Vectors.asDouble(col(vecC)))
-    e.select(col(idC).cast("long"), clean.as("__v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        it.map { case (id, v) =>
-          var bestCell = cellIds(0)
-          var best = Double.NaN
-          var c = 0
-          while (c < cvs.length) {
-            val d = math.sqrt(Similarity.l2sqOrNaN(v, cvs(c)))
-            if (!d.isNaN && (best.isNaN || d < best)) {
-              best = d; bestCell = cellIds(c)
-            }
-            c += 1
-          }
-          (id, v, bestCell)
-        }
-      }
-      .toDF(idC, "__v", "cell")
+    require(keys.size <= 1, "cell assignment carries at most one key column")
+    if (keys.isEmpty)
+      e.select(col(idC).cast("long"), clean.as("__v"))
+        .as[(Long, Array[Double])]
+        .mapPartitions(_.map { case (id, v) => (id, v, nearest(v)) })
+        .toDF(idC, "__v", "cell")
+    else
+      e.select(col(idC).cast("long"), clean.as("__v"), col(keys.head).cast("long"))
+        .as[(Long, Array[Double], Long)]
+        .mapPartitions(_.map { case (id, v, k) => (id, v, nearest(v), k) })
+        .toDF(idC, "__v", "cell", keys.head)
   }
 
   /** The within-cell lower-id near-dup prune as a per-cell kernel:
@@ -1216,36 +1237,52 @@ object Dedup {
     * left-to-right double folds for dot and both norms, `d / (sa * sb)`,
     * NaN (-> kept) for null/ragged/zero-norm routes — so the verdicts
     * are oracle-exact. Memory contract is SemDeDup's own: a cell's
-    * vectors fit one task (nCells scales with the corpus).
+    * vectors fit one task (nCells scales with the corpus). A key column
+    * carried by [[assignCells]] joins the cell in the group key.
     */
   private[graft] def pruneCells(assigned: DataFrame,
-      threshold: Double): DataFrame = {
+      threshold: Double, keys: Seq[String] = Nil): DataFrame = {
     val sp = assigned.sparkSession
     import sp.implicits._
-    assigned
-      .select(col("cell").cast("long"), col(assigned.columns.head).as("id"),
-        col("__v"))
-      .as[(Long, Long, Array[Double])]
-      .groupByKey(_._1)
-      .flatMapGroups { (cell: Long, it: Iterator[(Long, Long, Array[Double])]) =>
-        val rows = it.toArray.sortBy(_._2)
-        val n = rows.length
-        val kept = Array.fill(n)(true)
-        var i = 1
-        while (i < n) {
-          val vi = rows(i)._3
-          var j = 0
-          var dropped = false
-          while (j < i && !dropped) {
-            if (cosineExact(rows(j)._3, vi) >= threshold) dropped = true
-            j += 1
-          }
-          kept(i) = !dropped
-          i += 1
+    // (id, kept) for one cell's (id, vector) rows
+    val prune = (it: Iterator[(Long, Array[Double])]) => {
+      val rows = it.toArray.sortBy(_._1)
+      val n = rows.length
+      val kept = Array.fill(n)(true)
+      var i = 1
+      while (i < n) {
+        val vi = rows(i)._2
+        var j = 0
+        var dropped = false
+        while (j < i && !dropped) {
+          if (cosineExact(rows(j)._2, vi) >= threshold) dropped = true
+          j += 1
         }
-        rows.indices.iterator.map(k => (rows(k)._2, cell, kept(k)))
+        kept(i) = !dropped
+        i += 1
       }
-      .toDF("vec_id", "cell", "kept")
+      rows.indices.iterator.map(k => (rows(k)._1, kept(k)))
+    }
+    val cellRows = Seq(col("cell").cast("long"),
+      col(assigned.columns.head).as("id"), col("__v"))
+    if (keys.isEmpty)
+      assigned.select(cellRows: _*)
+        .as[(Long, Long, Array[Double])]
+        .groupByKey(_._1)
+        .flatMapGroups { (cell: Long, it: Iterator[(Long, Long, Array[Double])]) =>
+          prune(it.map(r => (r._2, r._3))).map { case (id, kept) => (id, cell, kept) }
+        }
+        .toDF("vec_id", "cell", "kept")
+    else
+      assigned.select(cellRows :+ col(keys.head).cast("long"): _*)
+        .as[(Long, Long, Array[Double], Long)]
+        .groupByKey(r => (r._4, r._1))
+        .flatMapGroups { (key: (Long, Long),
+            it: Iterator[(Long, Long, Array[Double], Long)]) =>
+          prune(it.map(r => (r._2, r._3)))
+            .map { case (id, kept) => (key._1, id, key._2, kept) }
+        }
+        .toDF(keys.head, "vec_id", "cell", "kept")
   }
 
   /** CCNet/Dolma-style segment dedup: split each document on a literal

@@ -535,11 +535,16 @@ object Similarity {
     * associative.
     */
   def knnJoinIvf(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCells: Int = 16, nProbe: Int = 2, qSalt: Int = 1): DataFrame = {
-    val cents = corpus.orderBy("vec_id").limit(nCells)
+      nCells: Int = 16, nProbe: Int = 2, qSalt: Int = 1): DataFrame =
+    knnJoinIvfCells(corpus, queries, prefixCentroids(corpus, nCells), k,
+      nProbe, qSalt)
+
+  /** [[knnJoinIvf]]'s centroids: the first `nCells` corpus vectors by
+    * vec_id as a lazy (cent_id, centv) frame.
+    */
+  def prefixCentroids(corpus: DataFrame, nCells: Int): DataFrame =
+    corpus.orderBy("vec_id").limit(nCells)
       .select(col("vec_id").as("cent_id"), col("embedding").as("centv"))
-    knnJoinIvfCells(corpus, queries, cents, k, nProbe, qSalt)
-  }
 
   /** [[knnJoinIvf]] with Lloyd-TRAINED centroids ([[trainedCentroids]]'
     * determinism contract — `iters` exact rounds from the prefix-sample

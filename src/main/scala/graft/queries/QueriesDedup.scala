@@ -18,13 +18,51 @@ import graft.quality.DataQuality
   */
 private[graft] trait QueriesDedup { this: SparkEntry.type =>
 
+  // ---- headline builders (see QueriesRelational: `rep` leads the keys)
+
+  /** Exact dedup by content digest. */
+  private[graft] def dedupExact(docs: DataFrame,
+      rep: Seq[String] = Nil): DataFrame =
+    Dedup.exact(docs, "text", "doc_id", rep).orderBy((rep :+ "digest").map(col): _*)
+
+  /** MinHash signatures (first 4 hash slots surfaced as columns). Per
+    * document, so replicas need only rep-disjoint doc ids.
+    */
+  private[graft] def dedupMinhash(docs: DataFrame): DataFrame =
+    Dedup.minhashSignatures(docs, "text", "doc_id", numHashes = 4, shingleK = 3)
+      .select(col("doc_id"),
+        col("sig")(0).as("h0"), col("sig")(1).as("h1"),
+        col("sig")(2).as("h2"), col("sig")(3).as("h3"))
+      .orderBy("doc_id")
+
+  /** Duplicated-passage detection (substring-level dedup): maximal token
+    * spans whose every 5-gram window occurs >= 2 times corpus-wide — the
+    * relational form of suffix-based span dedup (vs the doc-level dedup_*
+    * family). Spans merge via gaps-and-islands per doc.
+    */
+  private[graft] def dedupPassages(docs: DataFrame,
+      rep: Seq[String] = Nil): DataFrame =
+    Dedup.duplicatedPassages(docs, "text", "doc_id", k = 5, keys = rep)
+      .orderBy((rep ++ Seq("id", "span_start")).map(col): _*)
+
+  /** SemDeDup semantic dedup (scaladoc at its corpus entry) over
+    * centroids trained on the base embeddings.
+    */
+  private[graft] def dedupSemantic(embeddings: DataFrame,
+      cents: Seq[(Int, Array[Double])], rep: Seq[String] = Nil): DataFrame =
+    Dedup.semanticDedupWithCentroids(embeddings, cents, "vec_id", "embedding",
+      threshold = 0.38, keys = rep)
+      .orderBy((rep :+ "vec_id").map(col): _*)
+
+  /** The 16 cells x 2 Lloyd rounds [[dedupSemantic]] prunes within. */
+  private[graft] def semanticCentroids(embeddings: DataFrame): Seq[(Int, Array[Double])] =
+    Similarity.trainedCentroids(embeddings, nCells = 16, iters = 2)
+
   protected def dedupQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- north-star extensions (BASELINE.json) ----------------------------
 
-    // Exact dedup by content digest.
-    "dedup_exact" -> ((s, d) =>
-      Dedup.exact(t(s, d, "documents"), "text", "doc_id").orderBy("digest")),
+    "dedup_exact" -> ((s, d) => dedupExact(t(s, d, "documents"))),
 
     // The one-call fuzzy-dedup COMPOSITE (exact digests → MinHash-LSH
     // candidates → exact-Jaccard verify → connected components →
@@ -110,14 +148,7 @@ private[graft] trait QueriesDedup { this: SparkEntry.type =>
         window = 3)
     }),
 
-    // MinHash signatures (first 4 hash slots surfaced as columns).
-    "dedup_minhash" -> ((s, d) =>
-      Dedup.minhashSignatures(t(s, d, "documents"), "text", "doc_id",
-        numHashes = 4, shingleK = 3)
-        .select(col("doc_id"),
-          col("sig")(0).as("h0"), col("sig")(1).as("h1"),
-          col("sig")(2).as("h2"), col("sig")(3).as("h3"))
-        .orderBy("doc_id")),
+    "dedup_minhash" -> ((s, d) => dedupMinhash(t(s, d, "documents"))),
 
     // LSH band tuning report: per band, multi-member bucket count, the
     // hottest bucket, candidate pairs Σ s(s−1)/2, and how many docs stay
@@ -469,13 +500,7 @@ private[graft] trait QueriesDedup { this: SparkEntry.type =>
         .orderBy("cluster_size")
     }),
 
-    // Duplicated-passage detection (substring-level dedup): maximal token
-    // spans whose every 5-gram window occurs >= 2 times corpus-wide —
-    // the relational form of suffix-based span dedup (vs the doc-level
-    // dedup_* family). Spans merge via gaps-and-islands per doc.
-    "dedup_passages" -> ((s, d) =>
-      Dedup.duplicatedPassages(t(s, d, "documents"), "text", "doc_id", k = 5)
-        .orderBy("id", "span_start")),
+    "dedup_passages" -> ((s, d) => dedupPassages(t(s, d, "documents"))),
 
     // Bloom-prefiltered incremental dedup: which docs with id >= 250 carry
     // text NOT already present among ids < 250? Result is bit-identical to
@@ -582,10 +607,10 @@ private[graft] trait QueriesDedup { this: SparkEntry.type =>
     // cosine. Threshold 0.38 is demo level for these near-random
     // synthetic vectors (production uses ~0.95); training, assignment,
     // and the prune all replay in the oracle.
-    "dedup_semantic" -> ((s, d) =>
-      Dedup.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        nCells = 16, iters = 2, threshold = 0.38)
-        .orderBy("vec_id"))
+    "dedup_semantic" -> ((s, d) => {
+      val emb = t(s, d, "embeddings")
+      dedupSemantic(emb, semanticCentroids(emb))
+    })
   )
 
   /** Shared by `dedup_segments` and its streaming twin

@@ -18,6 +18,57 @@ import graft.quality.DataQuality
   */
 private[graft] trait QueriesGraphEvents { this: SparkEntry.type =>
 
+  // ---- headline builders (see QueriesRelational: `rep` leads the keys)
+
+  /** Window functions (engine surface beyond the reference; SURVEY §2.5). */
+  private[graft] def w1Window(orders: DataFrame,
+      rep: Seq[String] = Nil): DataFrame = {
+    val o = orders.where(col("o_custkey") <= 100)
+    val w = Window.partitionBy((rep :+ "o_custkey").map(col): _*)
+      .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
+    o.select(rep.map(col) ++ Seq(
+      col("o_custkey"), col("o_orderkey"),
+      row_number().over(w).cast("long").as("rn"),
+      sum(col("o_totalprice").cast(DecimalType(18, 2)))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("double").as("running_total")): _*)
+      .orderBy((rep ++ Seq("o_custkey", "rn")).map(col): _*)
+  }
+
+  /** ts_sessionize (scaladoc at its corpus entry). Replicas enter
+    * through rep-disjoint user ids: the kernel keys on one user column.
+    */
+  private[graft] def tsSessionize(events: DataFrame): DataFrame = {
+    val gapUs = 8L * 3600 * 1000000L
+    val ev = events
+      .where(col("user_id").isNotNull && col("ts").isNotNull)
+      .withColumn("ts_us", expr("ts DIV 1000"))
+    graft.ops.Sessionize
+      .sessionStatsKernel(ev, "user_id", "ts_us", "event_id", gapUs)
+      .select(col("user_id"),
+        col("start_ts").as("session_start_us"),
+        (col("end_ts") + gapUs).as("session_end_us"),
+        col("n_events"))
+      .orderBy("user_id", "session_start_us")
+  }
+
+  /** PageRank, two exact-integer iterations over a derived 1000-node
+    * graph (out-degree 2 per source). Integer nano-arithmetic end to end
+    * -> the oracle replays BOTH iterations in plain SQL, bit-exact. Each
+    * replica's graph is offset by `rep` x 1e6 node ids: ranks never
+    * normalize across components, so the replicas are independent runs.
+    */
+  private[graft] def graphPagerank(part: DataFrame,
+      rep: Seq[String] = Nil): DataFrame = {
+    def node(c: Column): Column = rep.foldLeft(c)((n, k) => n + col(k) * 1000000L)
+    val base = part.where(col("p_partkey") <= 1000)
+    val edges = base.select(node(col("p_partkey")).as("src"),
+      node(expr("(p_partkey * 31 + 7) % 1000")).as("dst"))
+      .unionByName(base.select(node(col("p_partkey")).as("src"),
+        node(expr("(p_partkey * 17 + 3) % 1000")).as("dst")))
+    graft.ops.Graph.pageRank(edges, iterations = 2).orderBy("id")
+  }
+
   protected def graphEventsQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Frame-clause window battery: cume_dist, first/last/nth over running
@@ -43,19 +94,7 @@ private[graft] trait QueriesGraphEvents { this: SparkEntry.type =>
         .orderBy("o_custkey", "o_orderkey")
     }),
 
-    // Window functions (engine surface beyond the reference; SURVEY §2.5).
-    "w1_window" -> ((s, d) => {
-      val o = t(s, d, "orders").where(col("o_custkey") <= 100)
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      o.select(
-        col("o_custkey"), col("o_orderkey"),
-        row_number().over(w).cast("long").as("rn"),
-        sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("running_total"))
-        .orderBy("o_custkey", "rn")
-    }),
+    "w1_window" -> ((s, d) => w1Window(t(s, d, "orders"))),
 
     // Sessionization (window-function tier): 30-minute inactivity gap over
     // the raw epoch-nanos column — exact integer math, oracle-reproducible.
@@ -229,19 +268,7 @@ private[graft] trait QueriesGraphEvents { this: SparkEntry.type =>
     // shape cross-checking the native operator against the kernel form.
     // Bounds as epoch micros (no ts-to-string formatting in the strict
     // compare).
-    "ts_sessionize" -> ((s, d) => {
-      val gapUs = 8L * 3600 * 1000000L
-      val ev = t(s, d, "events")
-        .where(col("user_id").isNotNull && col("ts").isNotNull)
-        .withColumn("ts_us", expr("ts DIV 1000"))
-      graft.ops.Sessionize
-        .sessionStatsKernel(ev, "user_id", "ts_us", "event_id", gapUs)
-        .select(col("user_id"),
-          col("start_ts").as("session_start_us"),
-          (col("end_ts") + gapUs).as("session_end_us"),
-          col("n_events"))
-        .orderBy("user_id", "session_start_us")
-    }),
+    "ts_sessionize" -> ((s, d) => tsSessionize(t(s, d, "events"))),
 
     // Calendar-correct rolling 7-day totals: ROWS frames only mean
     // "trailing week" on a DENSE spine (on raw observations, 6 PRECEDING
@@ -636,17 +663,7 @@ private[graft] trait QueriesGraphEvents { this: SparkEntry.type =>
         .orderBy("event_type", "lag")
     }),
 
-    // PageRank, two exact-integer iterations over a derived 1000-node
-    // graph (out-degree 2 per source). Integer nano-arithmetic end to end
-    // -> the oracle replays BOTH iterations in plain SQL, bit-exact.
-    "graph_pagerank" -> ((s, d) => {
-      val base = t(s, d, "part").where(col("p_partkey") <= 1000)
-      val edges = base.select(col("p_partkey").as("src"),
-        expr("(p_partkey * 31 + 7) % 1000").as("dst"))
-        .unionByName(base.select(col("p_partkey").as("src"),
-          expr("(p_partkey * 17 + 3) % 1000").as("dst")))
-      graft.ops.Graph.pageRank(edges, iterations = 2).orderBy("id")
-    }),
+    "graph_pagerank" -> ((s, d) => graphPagerank(t(s, d, "part"))),
 
     // Per-node triangle counts on the same deterministic graph — the
     // clustering-coefficient numerator (see Graph.triangleCounts).

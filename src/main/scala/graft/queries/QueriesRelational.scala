@@ -18,6 +18,80 @@ import graft.quality.DataQuality
   */
 private[graft] trait QueriesRelational { this: SparkEntry.type =>
 
+  // ---- headline builders: the corpus entries below call them over the
+  // base tables; graft.Bench.fused calls them over replicated inputs with
+  // `rep` = the replica column, which leads every group and sort key.
+
+  /** A1 group-by multi-agg (reference calculate_metrics.py:123-131 shape). */
+  private[graft] def q1Agg(lineitem: DataFrame,
+      rep: Seq[String] = Nil): DataFrame = {
+    val keys = (rep ++ Seq("l_returnflag", "l_linestatus")).map(col)
+    lineitem.groupBy(keys: _*)
+      .agg(
+        (sum(cents(col("l_quantity"))).cast("double") / 100).as("sum_qty"),
+        (sum(cents(col("l_extendedprice"))).cast("double") / 100).as("sum_base_price"),
+        revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
+        (sum(cents(col("l_quantity"))).cast("double") / 100 /
+          count(lit(1))).as("avg_qty"),
+        count(lit(1)).as("count_order"))
+      .orderBy(keys: _*)
+  }
+
+  /** J1 multi-way inner equi-join + agg; dims broadcast (SURVEY §2.3).
+    * `lineitem` comes narrowed to (l_orderkey, l_extendedprice,
+    * l_discount) and spread: the single-row-group fact file scans as ONE
+    * partition, and without the spread the whole broadcast-probe chain
+    * runs on one core.
+    *
+    * Dims join the fact SEQUENTIALLY (r14, guide §3.1): each dim side is
+    * a base parquet scan with a real size statistic, so every join
+    * statically plans as a broadcast hash join and the fact side never
+    * shuffles. The previous form pre-collapsed customer->nation->region
+    * into one dim ("probe 2 hash tables, not 4") — but a JOIN OUTPUT has
+    * no usable size estimate, the 10 MB threshold could not prove the
+    * collapsed dim small, and the fact->cdim join fell back to a
+    * SortMergeJoin that exchanged the whole fact side by o_custkey
+    * (plans/r14/j1_multiway_join_before.txt, operators 23-25). Measured
+    * fused r=8, sf0.1: 0.2288 -> 0.1901 s/inst (83%, OPTIMIZATION_r14.md
+    * §1); after-plan has ZERO SortMergeJoins. No broadcast() hints: at
+    * 100 TB AQE picks shuffle joins instead of a forced OOM.
+    */
+  private[graft] def j1MultiwayJoin(lineitem: DataFrame, orders: DataFrame,
+      customer: DataFrame, nation: DataFrame, region: DataFrame,
+      rep: Seq[String] = Nil): DataFrame = {
+    val keys = (rep ++ Seq("r_name", "n_name")).map(col)
+    lineitem
+      .join(orders.select("o_orderkey", "o_custkey"),
+        col("l_orderkey") === col("o_orderkey"))
+      .join(customer.select("c_custkey", "c_nationkey"),
+        col("o_custkey") === col("c_custkey"))
+      .join(nation.select("n_nationkey", "n_name", "n_regionkey"),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(region.select("r_regionkey", "r_name"),
+        col("n_regionkey") === col("r_regionkey"))
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as("n_items"),
+        revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
+      .orderBy(keys: _*)
+  }
+
+  /** A8 pivot aggregation (metrics_dashboard.py:34-39), explicit values
+    * for a deterministic single-pass plan (SURVEY §7.4.9).
+    */
+  private[graft] def a8Pivot(events: DataFrame,
+      rep: Seq[String] = Nil): DataFrame = {
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    val ev = events
+      .select(rep.map(col) ++ Seq(
+        date_trunc("day", Graft.nanosToTimestamp("ts")).cast("date")
+          .cast("string").as("day"),
+        col("event_type"), col("value").cast(DecimalType(28, 10)).as("dval")): _*)
+    val keys = (rep :+ "day").map(col)
+    val piv = ev.groupBy(keys: _*).pivot("event_type", types).sum("dval")
+    piv.select(keys ++ types.map(ty => col(ty).cast("double").as(ty)): _*)
+      .orderBy(keys: _*)
+  }
+
   protected def relationalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // S1/S3 glob multi-file CSV scan with declared casts: nation split into
@@ -75,17 +149,7 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
         .orderBy("o_orderkey")
     }),
 
-    // A1 group-by multi-agg (reference calculate_metrics.py:123-131 shape).
-    "q1_agg" -> ((s, d) => t(s, d, "lineitem")
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        (sum(cents(col("l_quantity"))).cast("double") / 100).as("sum_qty"),
-        (sum(cents(col("l_extendedprice"))).cast("double") / 100).as("sum_base_price"),
-        revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
-        (sum(cents(col("l_quantity"))).cast("double") / 100 /
-          count(lit(1))).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")),
+    "q1_agg" -> ((s, d) => q1Agg(t(s, d, "lineitem"))),
 
     // Salted two-stage aggregation (skew-safe agg). The oracle computes
     // the PLAIN group-by: the salting must be result-invisible — exact
@@ -174,39 +238,11 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
       .select("c_mktsegment").na.drop().distinct()
       .orderBy("c_mktsegment")),
 
-    // J1 multi-way inner equi-join + agg; dims broadcast (SURVEY §2.3).
-    "j1_multiway_join" -> ((s, d) => {
-      // spread: the single-row-group fact file scans as ONE partition;
-      // without it the whole broadcast-probe chain runs on one core
-      val li = Graft.spread(t(s, d, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_discount"))
-      val o = t(s, d, "orders").select("o_orderkey", "o_custkey")
-      // Dims join the fact SEQUENTIALLY (r14, guide §3.1): each dim side
-      // is a base parquet scan with a real size statistic, so every join
-      // statically plans as a broadcast hash join and the fact side never
-      // shuffles. The previous form pre-collapsed customer->nation->region
-      // into one dim ("probe 2 hash tables, not 4") — but a JOIN OUTPUT
-      // has no usable size estimate, the 10 MB threshold could not prove
-      // the collapsed dim small, and the fact->cdim join fell back to a
-      // SortMergeJoin that exchanged the whole fact side by o_custkey
-      // (plans/r14/j1_multiway_join_before.txt, operators 23-25).
-      // Measured (OptProbe r14, fused r=8, sf0.1): 0.2288 -> 0.1901
-      // s/inst (83%); after-plan has ZERO SortMergeJoins.
-      // No broadcast() hints: at 100 TB AQE picks shuffle joins instead
-      // of a forced OOM.
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer").select("c_custkey", "c_nationkey"),
-          col("o_custkey") === col("c_custkey"))
-        .join(t(s, d, "nation")
-          .select("n_nationkey", "n_name", "n_regionkey"),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(t(s, d, "region").select("r_regionkey", "r_name"),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_items"),
-          revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy("r_name", "n_name")
-    }),
+    "j1_multiway_join" -> ((s, d) => j1MultiwayJoin(
+      Graft.spread(t(s, d, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount")),
+      t(s, d, "orders"), t(s, d, "customer"), t(s, d, "nation"),
+      t(s, d, "region"))),
 
     // J1 iterative fold-join with deterministic collision renaming
     // (calculate_metrics.py:56-62; SURVEY §7.4.1 `_fN` scheme).
@@ -545,18 +581,7 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
         "metric", "value")
       .orderBy("l_orderkey", "l_linenumber", "metric")),
 
-    // A8 pivot aggregation (metrics_dashboard.py:34-39), explicit values
-    // for a deterministic single-pass plan (SURVEY §7.4.9).
-    "a8_pivot" -> ((s, d) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val ev = t(s, d, "events")
-        .select(date_trunc("day", Graft.nanosToTimestamp("ts")).cast("date")
-          .cast("string").as("day"),
-          col("event_type"), col("value").cast(DecimalType(28, 10)).as("dval"))
-      val piv = ev.groupBy("day").pivot("event_type", types).sum("dval")
-      piv.select(col("day") +: types.map(ty => col(ty).cast("double").as(ty)): _*)
-        .orderBy("day")
-    }),
+    "a8_pivot" -> ((s, d) => a8Pivot(t(s, d, "events"))),
 
     // DYNAMIC pivot: spine columns discovered from the data (one bounded
     // distinct-collect — the two-pass shape every dynamic-pivot engine

@@ -18,6 +18,46 @@ import graft.quality.DataQuality
   */
 private[graft] trait QueriesSim { this: SparkEntry.type =>
 
+  // ---- headline builders. Replicas enter the sim_* queries as
+  // rep-disjoint QUERY ids against one resident corpus; `rep` is not a
+  // column here. The scheduling parameters (nBlocks, partitionQueries,
+  // qSalt) never change a result; the bench passes its own.
+
+  /** Brute-force cosine top-k (exact ANN baseline). */
+  private[graft] def simBruteTopk(corpus: DataFrame, queries: DataFrame): DataFrame =
+    Similarity.bruteForceTopK(corpus, queries, k = 10)
+      .withColumn("cosine", round(col("cosine"), 6))
+      .orderBy("query_id", "rank")
+
+  /** Product-quantization ANN (8 sub-spaces x 16 centroids = 64x vector
+    * compression) with ADC scoring and exact rerank; the whole pipeline —
+    * codebook, encode, lookup tables, candidate cut — replays in the
+    * oracle.
+    */
+  private[graft] def simPqTopk(corpus: DataFrame, queries: DataFrame): DataFrame =
+    Similarity.pqTopK(corpus, queries, k = 10,
+      m = 8, dsub = 8, codebookSize = 16, rerank = 40)
+      .withColumn("cosine", round(col("cosine"), 6))
+      .orderBy("query_id", "rank")
+
+  /** Distributed exact kNN JOIN (scaladoc at the sim_knn_join entry). */
+  private[graft] def simKnnJoin(corpus: DataFrame, queries: DataFrame,
+      nBlocks: Int = 4, partitionQueries: Boolean = false): DataFrame =
+    Similarity.knnJoin(corpus, queries, k = 3, nBlocks = nBlocks,
+      partitionQueries = partitionQueries)
+      .withColumn("cosine", round(col("cosine"), 6))
+      .orderBy("query_id", "rank")
+
+  /** IVF-partitioned approximate kNN join (scaladoc at the
+    * sim_knn_join_ivf entry) over the given centroid frame.
+    */
+  private[graft] def simKnnJoinIvf(corpus: DataFrame, queries: DataFrame,
+      cents: DataFrame, qSalt: Int = 1): DataFrame =
+    Similarity.knnJoinIvfWithCentroids(corpus, queries, cents, k = 3,
+      nProbe = 2, qSalt = qSalt)
+      .withColumn("cosine", round(col("cosine"), 6))
+      .orderBy("query_id", "rank")
+
   protected def simQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Reciprocal-rank fusion of two retrieval rankers over the same
@@ -82,9 +122,7 @@ private[graft] trait QueriesSim { this: SparkEntry.type =>
     // lookup and every window runs on the bounded frame — never a
     // corpus-wide window.
     "rank_ndcg_multi" -> ((s, d) => {
-      val qs = Seq(1L -> Seq("spark", "join", "fast"),
-        2L -> Seq("customer", "query", "slow"),
-        3L -> Seq("vector", "hash", "merge"))
+      val qs = bm25Queries
       val docs = t(s, d, "documents")
       val rel = expr("CASE lang WHEN 'en' THEN 3L WHEN 'de' THEN 2L" +
         " WHEN 'fr' THEN 1L ELSE 0L END")
@@ -140,9 +178,7 @@ private[graft] trait QueriesSim { this: SparkEntry.type =>
 
     "rank_fusion_rrf" -> ((s, d) => {
       import s.implicits._
-      val qs = Seq(1L -> Seq("spark", "join", "fast"),
-        2L -> Seq("customer", "query", "slow"),
-        3L -> Seq("vector", "hash", "merge"))
+      val qs = bm25Queries
       val docs = t(s, d, "documents")
       val bm = TextAnalysis.bm25TopK(docs, qs, k = 20)
         .select("query_id", "doc_id", "rank")
@@ -179,12 +215,9 @@ private[graft] trait QueriesSim { this: SparkEntry.type =>
         .orderBy("query_id", "corpus_id")
     }),
 
-    // Brute-force cosine top-k (exact ANN baseline).
     "sim_brute_topk" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 5), k = 10)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
+      simBruteTopk(emb, emb.where(col("vec_id") < 5))
     }),
 
     // Distributed exact kNN JOIN, corpus vs corpus (the kNN-graph
@@ -194,9 +227,7 @@ private[graft] trait QueriesSim { this: SparkEntry.type =>
     // cross join as sim_brute_topk over all queries.
     "sim_knn_join" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      Similarity.knnJoin(emb, emb, k = 3, nBlocks = 4)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
+      simKnnJoin(emb, emb)
     }),
 
     // SemDeDup-at-corpus-scale composite: the distributed kNN self-join
@@ -487,16 +518,9 @@ private[graft] trait QueriesSim { this: SparkEntry.type =>
         .orderBy("query_id", "rank")
     }),
 
-    // Product-quantization ANN (8 sub-spaces x 16 centroids = 64x vector
-    // compression) with ADC scoring and exact rerank; the whole pipeline —
-    // codebook, encode, lookup tables, candidate cut — replays in the
-    // oracle.
     "sim_pq_topk" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      Similarity.pqTopK(emb, emb.where(col("vec_id") < 5), k = 10,
-        m = 8, dsub = 8, codebookSize = 16, rerank = 40)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
+      simPqTopk(emb, emb.where(col("vec_id") < 5))
     }),
 
     // PQ with Lloyd-trained sub-codebooks (2 rounds of assign + decimal-
@@ -581,9 +605,7 @@ private[graft] trait QueriesSim { this: SparkEntry.type =>
     // and a non-broadcast probe join).
     "sim_knn_join_ivf" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      Similarity.knnJoinIvf(emb, emb, k = 3, nCells = 16, nProbe = 2)
-        .withColumn("cosine", round(col("cosine"), 6))
-        .orderBy("query_id", "rank")
+      simKnnJoinIvf(emb, emb, Similarity.prefixCentroids(emb, nCells = 16))
     }),
 
     // knnJoinIvf with Lloyd-TRAINED centroids — the trained in-line form:

@@ -21,4 +21,21 @@ class ContractSpec extends SparkSpec {
       assert(!sql.toLowerCase.contains("get_json_object"), s"$name oracle not ANSI/DuckDB")
     }
   }
+
+  test("Verify.dump returns the names of the queries that failed") {
+    val empty = java.nio.file.Files.createTempDirectory("graft_no_tables")
+    val out = java.nio.file.Files.createTempDirectory("graft_verify_out")
+    assert(Verify.dump(spark, empty.toString, out.toString, Set("q1_agg")) ==
+      Seq("q1_agg"))
+  }
+
+  test("tools/baseline_pandas.py REPS equals Bench.headline") {
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("tools/baseline_pandas.py"))
+    val dict = """(?s)\nREPS = \{(.*?)\n\}""".r.findFirstMatchIn(text)
+      .map(_.group(1)).getOrElse(fail("no REPS dict in tools/baseline_pandas.py"))
+    val reps = """"(\w+)":\s*(\d+)""".r.findAllMatchIn(dict)
+      .map(m => m.group(1) -> m.group(2).toInt).toSeq
+    assert(reps == Bench.headline)
+  }
 }

@@ -1,11 +1,19 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.{Cleaning, Norm, StableHash, Text}
 
 /** Scalar/cleaning function semantics, incl. the SURVEY §7.4 traps. */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The declarative tokenizer [[Text.tokens]] replaced, kept verbatim as
+    * its parity reference.
+    */
+  private def tokensDeclarative(c: Column): Column =
+    when(c.isNull || trim(c) === "", array().cast("array<string>"))
+      .otherwise(split(trim(lower(c)), "\\s+"))
 
   test("native tokens == declarative regex-split form (planted + fuzz)") {
     // Planted: the declarative form's quirks must survive verbatim —
@@ -29,7 +37,7 @@ class FunctionsSpec extends SparkSpec {
           alphabet(rnd.nextInt(alphabet.length))).mkString)
     }
     val df = (planted ++ fuzz).toDF("t")
-      .select(Text.tokens($"t").as("nat"), Text.tokensDeclarative($"t").as("dec"))
+      .select(Text.tokens($"t").as("nat"), tokensDeclarative($"t").as("dec"))
     val rows = df.collect()
     rows.zip(planted ++ fuzz).foreach { case (r, in) =>
       assert(!r.isNullAt(0) && !r.isNullAt(1), s"null result for <$in>")
@@ -204,13 +212,13 @@ class FunctionsSpec extends SparkSpec {
         if (rnd.nextInt(12) == 0) None else Some(pool(rnd.nextInt(pool.length))))
     }
     val df = (planted ++ fuzz).toDF("toks")
-    // The native expression is compared directly: the production default
-    // is the declarative fold (see fingerprintFromTokens' scaladoc — the
+    // The native expression is compared directly: the shipped form is
+    // the declarative fold (see fingerprintFromTokens' scaladoc — the
     // native form loses in the resident bench session), but the parity
     // contract keeps the alternative swappable.
     val got = df.select(graft.plans.TokenFingerprint($"toks")).collect()
       .map(r => if (r.isNullAt(0)) null else r.getLong(0))
-    val want = df.select(Text.fingerprintFromTokensDeclarative($"toks")).collect()
+    val want = df.select(Text.fingerprintFromTokens($"toks")).collect()
       .map(r => if (r.isNullAt(0)) null else r.getLong(0))
     assert(got.toSeq == want.toSeq)
   }

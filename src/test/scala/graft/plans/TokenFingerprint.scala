@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * with 1-based positions — bit-identical to the declarative
   * `pmod(aggregate(zip_with(toks, sequence(1, n), (t, i) =>
   * (hash60(t) % 1000000) * i), 0L, _+_), 2147483647)` form
-  * ([[graft.functions.Text.fingerprintFromTokensDeclarative]];
-  * FunctionsSpec fuzz-proves the parity).
+  * ([[graft.functions.Text.fingerprintFromTokens]]; FunctionsSpec
+  * fuzz-proves the parity).
   *
-  * NOT the production default (r14): in an isolated A/B this expression
+  * Parked in test sources, NOT shipped (r14): in an isolated A/B this expression
   * is 12% faster than the declarative fold (ZipWith + Sequence +
   * ArrayAggregate evaluate interpreted and materialize two intermediate
   * arrays per doc), but inside the full resident bench session
@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * s/inst over six full-bench runs vs 0.143 declarative in the
   * controlled bisect) — a session-context JIT/GC effect the short probe
   * never sees. `Text.fingerprintFromTokens` therefore stays on the
-  * declarative fold; this expression is kept parity-tested so the
-  * decision is one line to revisit WITH a full-bench matched pair.
+  * declarative fold; this expression stays parity-tested so the
+  * decision can be revisited WITH a full-bench matched pair.
   *
   * Null semantics mirror the declarative form exactly: null array →
   * null; EMPTY array → 0; any null ELEMENT → null (hash60 is

@@ -40,7 +40,7 @@ import numpy as np
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 only = set(sys.argv[2:])  # empty = all workloads
 
-REPS = {  # keep in sync with graft.Bench.headline
+REPS = {  # ContractSpec asserts this equals graft.Bench.headline
     "q1_agg": 16, "j1_multiway_join": 8, "w1_window": 2048, "a8_pivot": 32,
     "dedup_exact": 256, "dedup_minhash": 8, "text_profile": 8,
     "sim_brute_topk": 8192, "dedup_passages": 4, "graph_pagerank": 2048,
